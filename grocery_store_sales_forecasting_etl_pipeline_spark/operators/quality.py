@@ -9,11 +9,11 @@ Counts are single Spark actions; multi-column null checks are ONE pass
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 
 @dataclass
@@ -23,10 +23,26 @@ class CheckResult:
     detail: str = ""
 
 
+def check_nonempty(n_rows: int, name: str = "nonempty") -> CheckResult:
+    """E2 on a precomputed row count."""
+    return CheckResult(name, n_rows > 0, "" if n_rows else "no rows")
+
+
+def check_no_nulls(null_counts: Mapping[str, int], name: str = "no_nulls") -> CheckResult:
+    """E4 on precomputed per-column null counts."""
+    offenders = {c: n for c, n in null_counts.items() if n}
+    return CheckResult(name, not offenders, f"null counts: {offenders}" if offenders else "")
+
+
+def check_min(col: str, lo, bound: float, name: str = "min_bound") -> CheckResult:
+    """E5 on a precomputed ``min(col)`` (None for an empty table)."""
+    ok = lo is not None and lo >= bound
+    return CheckResult(name, ok, f"min({col})={lo} < {bound}" if not ok else "")
+
+
 def expect_nonempty(df: DataFrame, name: str = "nonempty") -> CheckResult:
     """E2: table has rows (test_data_quality.py.py:13-15)."""
-    n = df.limit(1).count()
-    return CheckResult(name, n > 0, "" if n else "no rows")
+    return check_nonempty(df.limit(1).count(), name)
 
 
 def expect_columns(df: DataFrame, required: Sequence[str], name: str = "columns") -> CheckResult:
@@ -45,20 +61,21 @@ def expect_no_nulls(
     count per column, which is N full scans.
     """
     cols = list(cols or df.columns)
-    counts = df.agg(
-        *[F.count(F.when(F.col(c).isNull(), 1)).alias(c) for c in cols]
-    ).first()
-    offenders = {c: counts[c] for c in cols if counts[c]}
-    return CheckResult(name, not offenders, f"null counts: {offenders}" if offenders else "")
+    counts = df.agg(*null_counts(cols)).first()
+    return check_no_nulls({c: counts[c] for c in cols}, name)
+
+
+def null_counts(cols: Sequence[str], prefix: str = "") -> list[Column]:
+    """One ``count(col IS NULL)`` aggregate per column, aliased
+    ``prefix + col`` — E4's single-pass form."""
+    return [F.count(F.when(F.col(c).isNull(), 1)).alias(prefix + c) for c in cols]
 
 
 def expect_min(
     df: DataFrame, col: str, bound: float, name: str = "min_bound"
 ) -> CheckResult:
     """E5: min(col) >= bound (test_data_quality.py.py:74-77)."""
-    lo = df.agg(F.min(col)).first()[0]
-    ok = lo is not None and lo >= bound
-    return CheckResult(name, ok, f"min({col})={lo} < {bound}" if not ok else "")
+    return check_min(col, df.agg(F.min(col)).first()[0], bound, name)
 
 
 def expect_monotone_counts(
@@ -103,20 +120,14 @@ class QualityObservation:
         """Evaluate the collected metrics (blocks until the observed
         frame's action has run)."""
         vals = self.obs.get
-        out = [
-            CheckResult("nonempty", vals["n_rows"] > 0, "" if vals["n_rows"] else "no rows")
-        ]
+        out = [check_nonempty(vals["n_rows"])]
         for c in self.no_null_cols:
             n = vals[f"nulls__{c}"]
             out.append(
                 CheckResult(f"no_nulls:{c}", n == 0, f"null count: {n}" if n else "")
             )
         for c, bound in self.min_bounds.items():
-            lo = vals[f"min__{c}"]
-            ok = lo is not None and lo >= bound
-            out.append(
-                CheckResult(f"min_bound:{c}", ok, f"min({c})={lo} < {bound}" if not ok else "")
-            )
+            out.append(check_min(c, vals[f"min__{c}"], bound, f"min_bound:{c}"))
         return out
 
 
@@ -143,9 +154,7 @@ def observe_quality(
     from pyspark.sql import Observation
 
     obs = Observation(name)
-    metrics = [F.count(F.lit(1)).alias("n_rows")]
-    for c in no_null_cols:
-        metrics.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"nulls__{c}"))
+    metrics = [F.count(F.lit(1)).alias("n_rows"), *null_counts(no_null_cols, "nulls__")]
     for c in (min_bounds or {}):
         metrics.append(F.min(c).alias(f"min__{c}"))
     handle = QualityObservation(

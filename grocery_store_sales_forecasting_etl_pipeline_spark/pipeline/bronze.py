@@ -6,7 +6,10 @@ ingests each CSV to ``raw.<name>`` with corrupt-record quarantine to
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import functools
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -14,8 +17,15 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from pyspark.util import inheritable_thread_target
 
-from grocery_store_sales_forecasting_etl_pipeline_spark.sources.csv_ingest import ingest_csv
+from grocery_store_sales_forecasting_etl_pipeline_spark.sources.csv_ingest import (
+    land,
+    prepare_clean,
+    read_csv_permissive,
+    release_read,
+)
+from grocery_store_sales_forecasting_etl_pipeline_spark.sources.error_log import log_error
 
 
 def _s(*fields: tuple[str, type]) -> StructType:
@@ -65,6 +75,7 @@ SOURCES: tuple[tuple[str, StructType, bool], ...] = (
 )
 
 QUARANTINE_TABLE = "logs.quarantine"
+_STAGE = "bronze_ingestion"
 
 # natural key per source — what an incremental re-delivery upserts on.
 # run_incremental uses partition_upsert ONLY when the partition column
@@ -86,19 +97,50 @@ SOURCE_KEYS: dict[str, tuple[str, ...]] = {
 def run(spark: SparkSession, source_dir: str) -> dict[str, tuple[int, int]]:
     """Ingest every source CSV under ``source_dir`` (``<name>.csv``) to
     ``raw.<name>``. Returns {name: (clean_rows, quarantined_rows)}.
-    Missing files raise (and are error-logged), matching the reference's
-    fail-visibly behavior."""
-    results = {}
-    for name, schema, by_date in SOURCES:
-        results[name] = ingest_csv(
-            spark,
-            path=f"{source_dir}/{name}.csv",
-            schema=schema,
-            table=f"raw.{name}",
-            quarantine_table=QUARANTINE_TABLE,
-            partition_by_date=by_date,
-        )
-    return results
+
+    The sources land concurrently, one thread each (their small jobs
+    overlap on the executors; the caller's job group and description
+    follow them into the threads). Each is one cached permissive read and
+    one clean-side write that also counts both sides (``csv_ingest.land``).
+    Once every source has finished, all corrupt lines go to
+    ``logs.quarantine`` in one append, from this thread: concurrent
+    appends to one parquet table share its ``_temporary`` directory and
+    race to create the table.
+
+    Missing files raise, matching the reference's fail-visibly behavior,
+    but one failing source no longer stops the others: they are still
+    written and their corrupt lines quarantined. Every failing source
+    gets its own ``logs.etl_errors`` row, in ``SOURCES`` order, and the
+    first failure is re-raised."""
+
+    def land_source(name: str, schema: StructType, by_date: bool):
+        df = read_csv_permissive(spark, f"{source_dir}/{name}.csv", schema)
+        return land(df, f"raw.{name}", _STAGE, partition_by_date=by_date)
+
+    target = inheritable_thread_target(spark)(land_source)
+    with ThreadPoolExecutor(max_workers=len(SOURCES)) as pool:
+        futures = [pool.submit(target, *source) for source in SOURCES]
+    landed, failed = {}, []
+    for (name, _, _), future in zip(SOURCES, futures):
+        exc = future.exception()
+        if exc is None:
+            landed[name] = future.result()
+        else:
+            failed.append((name, exc))
+    try:
+        for name, exc in failed:
+            log_error(spark, str(exc), stage=_STAGE, source_file=f"{source_dir}/{name}.csv")
+        quarantine = [split.quarantine for _, n_q, split in landed.values() if n_q]
+        if quarantine:
+            functools.reduce(DataFrame.union, quarantine).write.mode("append").saveAsTable(
+                QUARANTINE_TABLE
+            )
+    finally:
+        for *_, split in landed.values():
+            split.release()
+    if failed:
+        raise failed[0][1]
+    return {name: (n_clean, n_q) for name, (n_clean, n_q, _) in landed.items()}
 
 
 def run_incremental(
@@ -122,13 +164,19 @@ def run_incremental(
     a write-cost metric, not "rows changed". Local existence probe is an
     ``os.path`` check; on an object store this is the same single LIST
     the reader would do anyway.
+
+    Unlike ``run``, the sources go one after another: ``partition_upsert``
+    flips the session-wide ``spark.sql.sources.partitionOverwriteMode``
+    around its ``insertInto``, so a concurrent overwrite of another table
+    could run in the wrong mode, and on Spark 4.1.2 ``insertInto``
+    ignores a per-write ``.option("partitionOverwriteMode", "dynamic")``
+    (it overwrites statically, wiping the other partitions). Each
+    source's permissive read stays cached until its upsert has written
+    the clean rows (see ``csv_ingest.split_permissive``).
     """
     import os
 
     from grocery_store_sales_forecasting_etl_pipeline_spark.sources import maintenance
-    from grocery_store_sales_forecasting_etl_pipeline_spark.sources.csv_ingest import (
-        prepare_clean,
-    )
 
     day_dir = f"{source_dir}/{batch_date:%Y/%m/%d}"
     results: dict[str, tuple[int, int]] = {}
@@ -141,18 +189,21 @@ def run_incremental(
         )
         table = f"raw.{name}"
         keys = list(SOURCE_KEYS[name])
-        if not spark.catalog.tableExists(table):
-            w = clean.write.mode("overwrite").format("parquet")
-            if by_date:
-                w = w.partitionBy("year", "month")
-            w.saveAsTable(table)
-            n = spark.table(table).count()
-        elif by_date and "date" in keys:
-            # partition column in the key => keys can't move partitions
-            n = maintenance.partition_upsert(
-                spark, table, clean, keys=keys, partition_cols=("year", "month")
-            )
-        else:
-            n = maintenance.merge_upsert(spark, table, clean, keys=keys)
+        try:
+            if not spark.catalog.tableExists(table):
+                w = clean.write.mode("overwrite").format("parquet")
+                if by_date:
+                    w = w.partitionBy("year", "month")
+                w.saveAsTable(table)
+                n = spark.table(table).count()
+            elif by_date and "date" in keys:
+                # partition column in the key => keys can't move partitions
+                n = maintenance.partition_upsert(
+                    spark, table, clean, keys=keys, partition_cols=("year", "month")
+                )
+            else:
+                n = maintenance.merge_upsert(spark, table, clean, keys=keys)
+        finally:
+            release_read(spark, path, schema)
         results[name] = (n, n_q)
     return results

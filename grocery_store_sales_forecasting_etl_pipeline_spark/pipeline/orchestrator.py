@@ -20,7 +20,8 @@ surface, engine-side and scheduler-agnostic:
 Scale notes: orchestration is pure control flow on the driver — each
 stage's heavy lifting stays in its own module's distributed plan; the
 only driver-side state is per-stage status rows. The quality gate runs
-the E2-E6 checks (operators/quality.py), each a single Spark action.
+the E2-E6 checks (operators/quality.py) on the inputs of a single Spark
+action.
 """
 
 from __future__ import annotations
@@ -74,29 +75,47 @@ def _default_alert(stage: str, exc: BaseException) -> None:
 
 def run_quality_gates(spark: SparkSession) -> list[Q.CheckResult]:
     """Cross-layer E2-E6 gate over the three written layers (reference
-    test_data_quality.py.py:13-94 run as a pipeline stage, not a test)."""
+    test_data_quality.py.py:13-94 run as a pipeline stage, not a test).
+
+    Every input — three layer counts, two transaction sums, the gold null
+    counts and the gold label minimum — comes from ONE action: one global
+    aggregate per table, cross-joined into a single row."""
     silver_df = spark.table(silver.OUTPUT_TABLE)
     gold_df = spark.table(gold.OUTPUT_TABLE)
-    bronze_tx = spark.table("raw.transactions")
+    gold_cols = [*gold.FEATURE_COLS, gold.LABEL_COL]
+    n_rows = F.count(F.lit(1))
 
-    n_bronze = bronze_tx.count()
-    n_silver = silver_df.count()
-    n_gold = gold_df.count()
-    silver_total = silver_df.agg(F.sum("transactions")).first()[0]
-    gold_total = gold_df.agg(F.sum(gold.LABEL_COL)).first()[0]
+    row = (
+        spark.table("raw.transactions")
+        .agg(n_rows.alias("n_bronze"))
+        .crossJoin(
+            silver_df.agg(
+                n_rows.alias("n_silver"), F.sum("transactions").alias("silver_total")
+            )
+        )
+        .crossJoin(
+            gold_df.agg(
+                n_rows.alias("n_gold"),
+                F.sum(gold.LABEL_COL).alias("gold_total"),
+                F.min(gold.LABEL_COL).alias("gold_min"),
+                *Q.null_counts(gold_cols, prefix="nulls__"),
+            )
+        )
+        .first()
+    )
 
     return [
-        Q.expect_nonempty(silver_df, "silver_nonempty"),
-        Q.expect_nonempty(gold_df, "gold_nonempty"),
-        Q.expect_columns(gold_df, [*gold.FEATURE_COLS, gold.LABEL_COL], "gold_columns"),
-        Q.expect_no_nulls(gold_df, [*gold.FEATURE_COLS, gold.LABEL_COL], "gold_no_nulls"),
-        Q.expect_min(gold_df, gold.LABEL_COL, 0.0, "gold_label_nonnegative"),
+        Q.check_nonempty(row.n_silver, "silver_nonempty"),
+        Q.check_nonempty(row.n_gold, "gold_nonempty"),
+        Q.expect_columns(gold_df, gold_cols, "gold_columns"),
+        Q.check_no_nulls({c: row[f"nulls__{c}"] for c in gold_cols}, "gold_no_nulls"),
+        Q.check_min(gold.LABEL_COL, row.gold_min, 0.0, "gold_label_nonnegative"),
         Q.expect_monotone_counts(
-            [("gold", n_gold), ("silver", n_silver), ("bronze", n_bronze)],
+            [("gold", row.n_gold), ("silver", row.n_silver), ("bronze", row.n_bronze)],
             strict_first=True,
             name="layer_counts",
         ),
-        Q.expect_mass_conservation(gold_total, silver_total, "transaction_mass"),
+        Q.expect_mass_conservation(row.gold_total, row.silver_total, "transaction_mass"),
     ]
 
 

@@ -20,17 +20,13 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
-from grocery_store_sales_forecasting_etl_pipeline_spark.sources.error_log import log_error
-
-CORRUPT_COL = "_corrupt_record"
-
-
-def _with_corrupt_capture(schema: StructType) -> StructType:
-    if any(f.name == CORRUPT_COL for f in schema.fields):
-        return schema
-    return StructType(list(schema.fields) + [StructField(CORRUPT_COL, StringType(), True)])
+from grocery_store_sales_forecasting_etl_pipeline_spark.sources.csv_ingest import (
+    CORRUPT_COL,
+    _with_corrupt_capture,
+    ingest_permissive,
+)
 
 
 def read_jsonl_permissive(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
@@ -58,29 +54,10 @@ def ingest_jsonl(
     ``csv_ingest.ingest_csv``: clean rows overwrite ``table``, corrupt
     raw lines append to ``quarantine_table``, failures log a structured
     row to logs.etl_errors and re-raise. Returns (clean, quarantined)."""
-    try:
-        df = read_jsonl_permissive(spark, path, schema).cache()
-        corrupt = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-            F.col(CORRUPT_COL).alias("raw_record"),
-            F.col("source_file"),
-            F.current_timestamp().alias("quarantined_at"),
-            F.lit(stage).alias("stage"),
-        )
-        clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-
-        n_quarantined = 0
-        if quarantine_table is not None:
-            n_quarantined = corrupt.count()
-            if n_quarantined:
-                corrupt.write.mode("append").saveAsTable(quarantine_table)
-
-        clean.write.mode("overwrite").format("parquet").saveAsTable(table)
-        n_clean = spark.table(table).count()
-        df.unpersist()
-        return n_clean, n_quarantined
-    except Exception as exc:  # noqa: BLE001 — same contract as reference E1
-        log_error(spark, str(exc), stage=stage, source_file=path)
-        raise
+    return ingest_permissive(
+        spark, read_jsonl_permissive, path, schema, table, quarantine_table,
+        partition_by_date=False, stage=stage,
+    )
 
 
 def write_jsonl(df: DataFrame, path: str, n_files: int | None = None) -> None:
