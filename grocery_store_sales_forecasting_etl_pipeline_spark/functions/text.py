@@ -134,12 +134,6 @@ def fingerprint(col: str | Column) -> Column:
     return F.md5(normalized)
 
 
-def fingerprint_bucket(col: str | Column, bits: int = 32) -> Column:
-    """Integer bucket from the fingerprint's leading hex digits — for
-    partitioning/bucketing a 100 TB dedup shuffle by fingerprint prefix."""
-    return F.conv(F.substring(fingerprint(col), 1, bits // 4), 16, 10).cast("long")
-
-
 def stopword_hits(col: str | Column, words: tuple[str, ...] = STOPWORDS) -> Column:
     """How many of the marker stopwords occur in the text (presence, not
     frequency): |distinct tokens ∩ markers| as ONE array_intersect —

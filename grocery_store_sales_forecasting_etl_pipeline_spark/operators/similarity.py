@@ -667,19 +667,6 @@ def lsh_ann_candidates(
 # ---------------------------------------------------------------------------
 
 
-def _collect_matrix(df: DataFrame, id_col: str, vec_col: str):
-    """(ids int64[n], unit-normalized float64[n,d]) from a DataFrame —
-    driver-side helper for structures that are SUPPOSED to be small
-    (centroid seeds, query sets)."""
-    import numpy as np
-
-    rows = df.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    return ids, mat
-
-
 def _make_assigner(b_cents, nprobe: int, id_name: str):
     """Factory for the mapInPandas assignment kernel (factory-closure
     pattern: the closure captures only the broadcast handle and plain
@@ -713,40 +700,6 @@ def _make_assigner(b_cents, nprobe: int, id_name: str):
     return assign
 
 
-def _make_mean_partialer(b_cents):
-    """Factory for the Lloyd-round kernel: assign each vector to its
-    nearest centroid AND emit per-batch partial (list_id, n, vsum) rows
-    — map-side combine for the mean recompute, so one scan of the
-    cached training sample per round with no join/explode/shuffle
-    (the partials are n_batches × n_lists rows, reduced driver-side)."""
-
-    def partials(batches):
-        import numpy as np
-        import pandas as pd
-
-        cents = b_cents.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            q = np.array(list(pdf["__vec"]), dtype="float64")
-            qn = q / np.linalg.norm(q, axis=1, keepdims=True)
-            sims = qn @ cents.T
-            order = np.argsort(-sims, axis=1, kind="stable")[:, 0]
-            lists, inv = np.unique(order, return_inverse=True)
-            sums = np.zeros((len(lists), q.shape[1]))
-            np.add.at(sums, inv, q)  # means use RAW vectors (spherical k-means)
-            counts = np.bincount(inv, minlength=len(lists))
-            yield pd.DataFrame(
-                {
-                    "list_id": lists.astype("int64"),
-                    "n": counts.astype("int64"),
-                    "vsum": list(sums),
-                }
-            )
-
-    return partials
-
-
 def ivf_train(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -755,30 +708,32 @@ def ivf_train(
     n_iter: int = 5,
     max_train_rows: int = 4096,
 ):
-    """Spherical k-means coarse quantizer, fully deterministic:
-    seeds = the unit vectors of the ``n_centroids`` smallest ids; each
-    Lloyd round assigns distributed (broadcast centroids + GEMM in
-    mapInPandas, ties to the lowest list id) and recomputes means
-    distributed (posexplode → groupBy(list, dim) avg), then
-    renormalizes on the driver (n_centroids × d doubles — tiny by
-    construction; that is what makes it a COARSE quantizer).
+    """Spherical k-means coarse quantizer, fully deterministic.
+
+    The training rows are collected once and everything after that runs
+    on the driver in numpy: seeds are the unit vectors of the
+    ``n_centroids`` smallest ids, and each of the ``n_iter`` Lloyd rounds
+    assigns every row to its most similar centroid (stable argsort, ties
+    to the lowest list id), replaces each centroid by the mean of its
+    members' RAW vectors accumulated in ascending id order (a list that
+    loses every member keeps its centroid), and renormalizes. The fixed
+    accumulation order is what makes the centroids bit-identical to the
+    registration-time replay behind ivf_ann_topk's oracle
+    (plans/simops._ivf_replay_centroids).
 
     Train-on-sample: a coarse quantizer only needs enough points to
     place ``n_centroids`` means, so when the corpus exceeds
-    ``max_train_rows`` the Lloyd loop runs on a deterministic md5-keyed
-    hash sample of ~that size (same engine-portable sampling rule as
-    the hash_sample query) — the n_iter sequential jobs then scan the
-    cached sample, not the full corpus, cutting 100 TB training cost by
-    ~corpus/sample per round. The full corpus is only scanned by the
-    caller's single assignment pass. Sampling stays reproducible across
-    runs, partitionings, and engines because membership is a pure
-    function of the id.
+    ``max_train_rows`` only a deterministic md5-keyed hash sample of
+    ~that size is collected (same engine-portable sampling rule as the
+    hash_sample query; membership is a pure function of the id, so the
+    sample is the same across runs, partitionings and engines). Two
+    Spark actions in all — the corpus count and the sample collect —
+    and the driver holds at most ~``max_train_rows`` vectors.
 
     Returns the (n_centroids, d) float64 centroid matrix.
     """
     import numpy as np
 
-    sc = df.sparkSession.sparkContext
     train = df.select(id_col, vec_col)
     n = train.count()
     if n > max_train_rows:
@@ -787,56 +742,26 @@ def ivf_train(
         train = train.filter(
             F.substring(F.md5(F.col(id_col).cast("string")), 1, 4) < thresh
         )
-    seeds = train.orderBy(id_col).limit(n_centroids)
-    _, cents = _collect_matrix(seeds, id_col, vec_col)
-    if len(cents) < n_centroids:
+    rows = sorted(train.collect(), key=lambda r: r[0])
+    if len(rows) < n_centroids:
         raise ValueError(
-            f"training sample has {len(cents)} rows < n_centroids={n_centroids}; "
+            f"training sample has {len(rows)} rows < n_centroids={n_centroids}; "
             "raise max_train_rows"
         )
-
-    # repartition(1) + sortWithinPartitions, NOT coalesce(1): coalesce
-    # propagates up the narrow lineage, so it would run the FULL corpus
-    # scan + sample filter in one task — a serial 100 TB read. The
-    # round-robin shuffle moves only the ≤ max_train_rows sample to a
-    # single partition (scan stays parallel), and the id sort makes the
-    # float accumulation order a pure function of the sampled IDS (one
-    # Arrow batch, one np.add.at pass) rather than of file/shuffle
-    # arrival order, which is nondeterministic after repartition. Float
-    # addition is non-associative, so without a pinned order the
-    # registration-time numpy replay behind ivf_ann_topk's generated
-    # oracle (plans/simops._ivf_replay_centroids, which sorts by id the
-    # same way) could diverge from the engine's centroids.
-    base = (
-        train.select(
-            F.col(id_col),
-            F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("__vec"),
-        )
-        .repartition(1)
-        .sortWithinPartitions(id_col)
-        .persist()
-    )
-    try:
-        for _ in range(n_iter):
-            b = sc.broadcast(cents)
-            partials = base.mapInPandas(
-                _make_mean_partialer(b), schema="list_id long, n long, vsum array<double>"
-            ).collect()
-            b.destroy()
-            sums = np.zeros_like(cents)
-            counts = np.zeros(len(cents), dtype="int64")
-            # sort partials so the float reduction order is run-stable
-            for r in sorted(partials, key=lambda r: (r["list_id"], tuple(r["vsum"]))):
-                sums[r["list_id"]] += np.asarray(r["vsum"])
-                counts[r["list_id"]] += r["n"]
-            new = cents.copy()  # lists that lost every member keep their seed
-            nz = counts > 0
-            new[nz] = sums[nz] / counts[nz, None]
-            norms = np.linalg.norm(new, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            cents = new / norms
-    finally:
-        base.unpersist()
+    x = np.array([r[1] for r in rows], dtype=np.float64)
+    xn = x / np.linalg.norm(x, axis=1, keepdims=True)
+    cents = xn[:n_centroids]
+    for _ in range(n_iter):
+        nearest = np.argsort(-(xn @ cents.T), axis=1, kind="stable")[:, 0]
+        sums = np.zeros_like(cents)
+        np.add.at(sums, nearest, x)  # means use RAW vectors (spherical k-means)
+        counts = np.bincount(nearest, minlength=n_centroids)
+        new = cents.copy()
+        nz = counts > 0
+        new[nz] = sums[nz] / counts[nz, None]
+        norms = np.linalg.norm(new, axis=1, keepdims=True)
+        norms[norms == 0] = 1.0
+        cents = new / norms
     return cents
 
 
@@ -851,19 +776,22 @@ def ivf_search(
     vec_col: str = "embedding",
     max_train_rows: int = 4096,
 ) -> DataFrame:
-    """IVF ANN top-k: train the coarse quantizer on the corpus, bucket
-    corpus vectors into their nearest inverted list, probe each query's
-    ``nprobe`` nearest lists, and run exact cosine only inside probed
-    lists. Returns (query_id, neighbor_id, cosine_sim, rnk).
+    """IVF ANN top-k: train the coarse quantizer on the corpus
+    (:func:`ivf_train`, on the driver), bucket every corpus vector into
+    its nearest inverted list, probe each query's ``nprobe`` nearest
+    lists, and run exact cosine only inside probed lists. Returns
+    (query_id, neighbor_id, cosine_sim, rnk).
 
-    Scale notes: training scans only the cached md5-hash sample
-    (≤ max_train_rows) per Lloyd round; the full corpus is scanned once
-    for the final bucketing and shuffled ONCE on list_id; queries fan
-    out nprobe rows
-    each and meet their lists in a single co-partitioned join —
-    candidate count is nprobe/n_centroids of the corpus instead of all
-    of it. Recall→1 as nprobe→n_centroids (exact at nprobe=n_centroids,
-    pinned by tests/test_similarity.py).
+    Scale notes: training touches the corpus with two actions (count,
+    then the collect of the ≤ ~max_train_rows md5 sample); the centroid
+    matrix is then broadcast once and both assignments run on executors
+    (mapInPandas GEMM against the centroids, ties to the lowest list
+    id). The full corpus is scanned once for its bucketing and shuffled
+    once on list_id; queries fan out nprobe rows each and meet their
+    lists in a single co-partitioned join, so candidate work is
+    ~nprobe/n_centroids of the corpus instead of all of it. Recall→1 as
+    nprobe→n_centroids (exact at nprobe=n_centroids, pinned by
+    tests/test_similarity.py).
     """
     from pyspark.sql.types import LongType, StructField, StructType
 

@@ -187,14 +187,13 @@ _IVF_MAX_TRAIN = 2048
 
 def _ivf_replay_centroids(sf_dir: str):
     """Replay operators/similarity.ivf_train in numpy over the oracle
-    parquet: same md5-prefix sample rule, same lowest-id unit-vector
-    seeds, same Lloyd round (stable argsort assignment on normalized
-    vectors, raw-vector means via sequential np.add.at in ascending
-    vec_id order — the identical accumulation the mapInPandas partialer
-    sees after ivf_train's id-sorted single partition — then
-    renormalize). Deterministic, so the converged centroids can be
-    emitted as SQL literals the same way ann_lsh_candidates emits its
-    hyperplanes."""
+    parquet, without the engine: same md5-prefix sample rule, same
+    lowest-id unit-vector seeds, same Lloyd round (stable argsort
+    assignment on normalized vectors, raw-vector means via sequential
+    np.add.at in ascending vec_id order, then renormalize). Deterministic,
+    so the converged centroids can be emitted as SQL literals the same
+    way ann_lsh_candidates emits its hyperplanes; ivf_train's centroids
+    are bit-identical to these (tests/test_similarity.py)."""
     import hashlib
 
     import duckdb
@@ -202,8 +201,7 @@ def _ivf_replay_centroids(sf_dir: str):
 
     con = duckdb.connect()
     try:
-        # ascending vec_id — ivf_train sortWithinPartitions(id_col) pins
-        # the engine's Arrow-batch order to exactly this
+        # ascending vec_id: the order ivf_train accumulates in
         rows = con.execute(
             f"SELECT vec_id, embedding FROM read_parquet('{sf_dir}/embeddings.parquet') "
             "ORDER BY vec_id"
@@ -251,14 +249,6 @@ def _ivf_sql() -> str | None:
     oracle is only valid at that directory — exactly the scope the
     driver and tests/test_oracle_parity.py compare at. Returns None
     (rows-only fallback) if the oracle dataset is unavailable at import.
-
-    Float-order contract with the engine: ivf_train shuffles its
-    (bounded) sample to one partition SORTED BY ID, and _IVF_MAX_TRAIN
-    (2048) is under Arrow's 10k records-per-batch default, so the
-    engine's accumulation is one sequential np.add.at pass in ascending
-    vec_id order — the exact order the replay uses. Raising
-    _IVF_MAX_TRAIN past the Arrow batch size would reintroduce
-    per-batch partials and break the bitwise replay.
     """
     import os
 

@@ -82,6 +82,8 @@ def get_spark(
         # inflation by the tail of a 158-query full-registry bench).
         # Force a periodic driver GC so cleanup actually runs.
         .config("spark.cleaner.periodicGC.interval", "2min")
+        # a medallion full load compiles ~180 classes: at the default 100 every pass recompiles them
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if master is not None:
         builder = builder.master(master)
@@ -92,29 +94,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Register the driver's parquet tables as temp views and return them.
-
-    Scans stay lazy; Catalyst pushes filters/column pruning into the
-    parquet reader per consumer query.
-    """
-    all_names = (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    out = {}
-    for name in names or all_names:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

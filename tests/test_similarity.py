@@ -5,8 +5,10 @@ semantics are pinned here)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from grocery_store_sales_forecasting_etl_pipeline_spark.operators import similarity as sim
+from grocery_store_sales_forecasting_etl_pipeline_spark.plans import simops
 from grocery_store_sales_forecasting_etl_pipeline_spark.plans._tables import table as _t
 
 
@@ -75,13 +77,24 @@ def test_ivf_partial_probe_recall(spark, sf_smoke):
     assert recall >= 0.6, f"IVF recall too low: {recall:.2f}"
 
 
-def test_ivf_train_deterministic(spark, sf_smoke):
+@pytest.mark.parametrize("max_train", [simops._IVF_MAX_TRAIN, 256])
+@pytest.mark.parametrize("sf_fixture", ["sf_smoke", "sf_oracle"])
+def test_ivf_train_matches_replay(spark, request, monkeypatch, sf_fixture, max_train):
+    """The engine's centroids are bit-identical to the DuckDB+numpy
+    replay that ivf_ann_topk's oracle embeds. The shipped
+    _IVF_MAX_TRAIN trains on the whole 500-row corpus; 256 takes the
+    md5-sample path on both sides."""
     import numpy as np
 
-    emb = _t(spark, sf_smoke, "embeddings")
-    c1 = sim.ivf_train(emb, n_centroids=4, n_iter=2)
-    c2 = sim.ivf_train(emb, n_centroids=4, n_iter=2)
-    assert np.allclose(c1, c2, atol=0)
+    monkeypatch.setattr(simops, "_IVF_MAX_TRAIN", max_train)
+    sf_dir = request.getfixturevalue(sf_fixture)
+    got = sim.ivf_train(
+        _t(spark, sf_dir, "embeddings"),
+        n_centroids=simops._IVF_CENTROIDS,
+        n_iter=simops._IVF_ITER,
+        max_train_rows=max_train,
+    )
+    assert np.array_equal(got, simops._ivf_replay_centroids(sf_dir))
 
 
 def test_in_block_gemm_subsplit_bounded_and_exact(spark, sf_smoke):
