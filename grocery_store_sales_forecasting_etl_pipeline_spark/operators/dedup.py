@@ -148,9 +148,7 @@ def jaccard_pairs(
     # second run (BASELINE.md r5).
     if materialize_shingles is None:
         size = _input_bytes(df)
-        materialize_shingles = (
-            size is not None and size >= _SHINGLE_MATERIALIZE_MIN_INPUT_BYTES
-        )
+        materialize_shingles = size >= _SHINGLE_MATERIALIZE_MIN_INPUT_BYTES
         _record_gate(
             "jaccard_pairs.shingle_checkpoint",
             size,

@@ -1,18 +1,19 @@
-"""Input-size metadata probes for scale-adaptive plan choices.
+"""Input-size estimates for scale-adaptive plan choices.
 
 Some plan shapes have a SCALE-DEPENDENT winner: the same exact result
 can come from a shape that is fastest when the input fits comfortably
 in memory/page cache and from a different shape that is the only one
 that survives a 10-100x scale-up (e.g. jaccard_pairs' shingle
 checkpoint, quantile_bracket_audit's rank-selection path). The gates
-decide from on-disk input file size — free Hadoop FS metadata, no job —
-and every gated site documents its measured crossover A/B in
-BASELINE.md so the threshold is evidence, not folklore.
+decide from Catalyst's plan statistics — no job, no file listing — and
+every gated site documents its measured crossover A/B in BASELINE.md so
+the threshold is evidence, not folklore.
 
-Caveat shared by all callers: ``input_bytes`` sums the LEAF input files
-of the frame, which equals the relevant corpus only when the frame is a
-direct scan of its source table. For derived frames (multi-table joins,
-heavy upstream filters) pass the decision explicitly instead.
+Every caller sizes the frame it gates, whatever its lineage: a file
+scan reports its files' on-disk bytes, a ``localCheckpoint`` reports
+the estimate of the plan it materialized. A leaf Spark cannot size
+reports ``spark.sql.defaultSizeInBytes`` (Long.MaxValue unless set), so
+a frame over such a leaf takes every gate's large-input branch.
 """
 
 from __future__ import annotations
@@ -62,42 +63,29 @@ if not _LOG.handlers:
 
 # site -> (bytes_seen, shape_chosen): the latest decision per gated
 # site, queryable by tests and by a post-run bench audit.
-LAST_DECISIONS: dict[str, tuple[int | None, str]] = {}
+LAST_DECISIONS: dict[str, tuple[int, str]] = {}
 
 
-def record_gate(site: str, bytes_seen: int | None, shape: str) -> None:
+def record_gate(site: str, bytes_seen: int, shape: str) -> None:
     """Expose a size-gate decision: remember it in ``LAST_DECISIONS``
     and emit one stderr log line. Call once per gated build."""
     LAST_DECISIONS[site] = (bytes_seen, shape)
     _LOG.info("gate %s: input_bytes=%s -> shape=%s", site, bytes_seen, shape)
 
 
-def input_bytes(df: DataFrame) -> int | None:
-    """Total on-disk bytes of the frame's input files, via the JVM Hadoop
-    FileSystem (metadata-only, works for any configured scheme — local,
-    HDFS, object stores). None when unknowable (non-file source, FS
-    error) — callers fall back to their small-input default."""
-    try:
-        files = df.inputFiles()
-        if not files:
-            return None
-        if all(f.startswith("file:") for f in files):
-            # local scheme: stat directly, no py4j round-trip per file
-            from urllib.parse import unquote, urlparse
-
-            return sum(
-                os.path.getsize(unquote(urlparse(f).path)) for f in files
-            )
-        jvm = df.sparkSession._jvm
-        hconf = df.sparkSession._jsc.hadoopConfiguration()
-        total = 0
-        for f in files:
-            path = jvm.org.apache.hadoop.fs.Path(f)
-            fs = path.getFileSystem(hconf)
-            total += fs.getFileStatus(path).getLen()
-        return total
-    except Exception:  # noqa: BLE001 — sizing is best-effort, never fail a build
-        return None
+def input_bytes(df: DataFrame) -> int:
+    """Bytes of the frame's inputs as Catalyst estimates them: the sum of
+    ``stats().sizeInBytes`` over the DISTINCT leaves of the optimized
+    logical plan. A leaf counts once per ``semanticHash``, so a
+    self-join of one table is that table's bytes, not a multiple. The
+    root plan's estimate is not used: a join's estimate is the product
+    of its inputs, far above anything the join reads."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    sizes = {}
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        sizes[leaf.semanticHash()] = int(leaf.stats().sizeInBytes())
+    return sum(sizes.values())
 
 
 # --- size-gated broadcast hint (r12 broadcast audit) -----------------------
@@ -108,40 +96,34 @@ def input_bytes(df: DataFrame) -> int | None:
 # a frame that is 24 KB at sf0.1 but billions of rows at sf1e5 would be
 # collected to the driver and shipped to every executor regardless.
 #
-# ``gated_broadcast`` keeps the hint only while the frame's LEAF input
-# files are small (default 512 MB of on-disk source bytes — guide §3.1:
-# "a few hundred MB is usually fine; multiple GB is asking for driver
-# OOMs"; the broadcast frame is a narrow projection/aggregate of that
-# source, so source bytes are a conservative upper bound). Above the
-# bound the hint is dropped and the planner + AQE choose from ACTUAL
-# runtime sizes — which still yields a broadcast join for genuinely
-# small aggregates (AQE rewrites SMJ->BHJ at stage boundaries) and a
-# sort-merge join for entity-grain frames that outgrew memory.
+# ``gated_broadcast`` keeps the hint only while the frame's inputs are
+# small by ``input_bytes`` (default 512 MB — guide §3.1: "a few hundred
+# MB is usually fine; multiple GB is asking for driver OOMs"; the
+# broadcast frame is a narrow projection/aggregate of those inputs, so
+# their bytes are a conservative upper bound). Above the bound the hint
+# is dropped and the planner + AQE choose from ACTUAL runtime sizes —
+# which still yields a broadcast join for genuinely small aggregates
+# (AQE rewrites SMJ->BHJ at stage boundaries) and a sort-merge join for
+# entity-grain frames that outgrew memory.
 #
 # Results are identical either way (join strategy never changes rows);
 # only the physical plan is scale-adaptive. Local bench plans are
-# byte-identical to the pre-gate plans because every sf0.1 input is
-# under 11 MB. Set SPARK_GRAFT_BCAST_INPUT_MAX=0 to force the no-hint
-# path (used to capture the demoted plan shape as evidence).
+# byte-identical to the pre-gate plans because no gated frame's inputs
+# reach 11 MB at sf0.1. Set SPARK_GRAFT_BCAST_INPUT_MAX=0 to force the
+# no-hint path (used to capture the demoted plan shape as evidence).
 _BCAST_INPUT_MAX = int(
     os.environ.get("SPARK_GRAFT_BCAST_INPUT_MAX", str(512 * 1024 * 1024))
 )
 
 
-def gated_broadcast(df: DataFrame, source: DataFrame | None = None) -> DataFrame:
-    """``F.broadcast(df)`` while df's leaf input bytes stay under
+def gated_broadcast(df: DataFrame) -> DataFrame:
+    """``F.broadcast(df)`` while ``input_bytes(df)`` stays under
     ``SPARK_GRAFT_BCAST_INPUT_MAX``; the bare frame (planner + AQE
     decide) above it. Drop-in replacement for ``F.broadcast`` at call
     sites whose frame grain scales with the data (the broadcast-audit
-    "gate" class); fixed-grain dims keep the unconditional hint.
-
-    ``source``: size from this frame instead of ``df`` — required when
-    ``df``'s lineage passes a ``localCheckpoint`` (the plan bottoms at
-    LogicalRDD, ``inputFiles()`` is empty, and the gate would silently
-    keep the hint at every scale); pass the base-table frame the
-    checkpointed intermediate derives from."""
-    size = input_bytes(source if source is not None else df)
-    if size is None or size <= _BCAST_INPUT_MAX:
+    "gate" class); fixed-grain dims keep the unconditional hint."""
+    size = input_bytes(df)
+    if size <= _BCAST_INPUT_MAX:
         return F.broadcast(df)
     # demotion is the rare, scale-up-only path: make it visible
     frame = sys._getframe(1)

@@ -560,7 +560,7 @@ def quantile_bracket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = li.select(F.col("l_returnflag"), cents.alias("cents"))
 
     size = input_bytes(li)
-    small = size is None or size < _QUANTILE_HISTO_MIN_INPUT_BYTES
+    small = size < _QUANTILE_HISTO_MIN_INPUT_BYTES
     record_gate(
         "quantile_bracket_audit", size, "per_flag_sort" if small else "histogram"
     )

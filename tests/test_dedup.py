@@ -101,6 +101,9 @@ def test_input_bytes_reads_parquet_metadata(spark, sf_oracle):
             if not f.startswith((".", "_"))
         )
     assert measured == actual
+    # a self-join reads the table once: its leaves count once
+    joined = df.alias("a").join(df.alias("b"), "doc_id")
+    assert dd._input_bytes(joined) == actual
 
 
 def test_shingle_materialization_gate_and_equivalence(spark, sf_oracle):

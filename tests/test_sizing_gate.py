@@ -5,11 +5,15 @@ RESULT is identical either way — a join strategy never changes rows."""
 
 from __future__ import annotations
 
+import inspect
+from pathlib import Path
+
 import pyspark.sql.functions as F
 import pytest
 
+from grocery_store_sales_forecasting_etl_pipeline_spark import plans
 from grocery_store_sales_forecasting_etl_pipeline_spark.operators import sizing
-from grocery_store_sales_forecasting_etl_pipeline_spark.plans import wrapped_build
+from grocery_store_sales_forecasting_etl_pipeline_spark.plans import REGISTRY, wrapped_build
 
 
 def _plan(df) -> str:
@@ -53,13 +57,24 @@ def test_oversize_input_drops_hint(spark, sf_smoke, monkeypatch):
 def test_non_file_frame_defaults_to_broadcast(spark):
     lit = spark.range(5).select(F.col("id").alias("k"))
     big = spark.range(1000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
-    # input_bytes is None for non-file sources -> keep the hint
+    # a Range leaf is sized too (5 longs = 40 B), far under the bound
     joined = big.join(sizing.gated_broadcast(lit), "k")
     # Spark 4 folds the hint into the Join node: rightHint=(strategy=broadcast)
     assert "strategy=broadcast" in joined._jdf.queryExecution().optimizedPlan().toString()
 
 
-@pytest.mark.parametrize("query", ["dim_enrich_join", "nation_pair_trade"])
+@pytest.mark.parametrize(
+    "query",
+    [
+        "dim_enrich_join",
+        "nation_pair_trade",
+        # gated frames behind a localCheckpoint
+        "supplier_part_assortativity",
+        "supplier_overlap_jaccard",
+        "bigram_pmi_topk",
+        "tfidf_cosine_pairs",
+    ],
+)
 def test_gate_demotion_preserves_results(spark, sf_smoke, monkeypatch, query):
     build = wrapped_build(query)
     base = {tuple(map(str, r)) for r in build(spark, sf_smoke).collect()}
@@ -68,21 +83,62 @@ def test_gate_demotion_preserves_results(spark, sf_smoke, monkeypatch, query):
     assert base == demoted
 
 
-def test_checkpointed_frame_sizes_via_source(spark, sf_smoke, monkeypatch):
-    """A localCheckpoint'ed frame has no leaf input files (LogicalRDD),
-    so the gate must size from the ``source=`` base frame instead of
-    silently keeping the hint at every scale."""
+def test_checkpointed_frame_is_sized(spark, sf_smoke, monkeypatch):
+    """A localCheckpoint'ed frame has no input files (its plan bottoms
+    at LogicalRDD), but its plan statistics still carry a size: at
+    bound 0 the gate must drop the hint, not keep it at every scale."""
     monkeypatch.setattr(sizing, "_BCAST_INPUT_MAX", 0)
     d = spark.read.parquet(f"{sf_smoke}/documents.parquet")
     ck = d.select("doc_id").localCheckpoint(eager=False)
     big = d.select("doc_id", "source")
+    joined = big.join(sizing.gated_broadcast(ck), "doc_id")
+    assert "strategy=broadcast" not in joined._jdf.queryExecution().optimizedPlan().toString()
 
-    def plan(dim):
-        return (
-            big.join(dim, "doc_id")._jdf.queryExecution().optimizedPlan().toString()
-        )
 
-    # without source the gate cannot see the scan -> hint kept (None path)
-    assert "strategy=broadcast" in plan(sizing.gated_broadcast(ck))
-    # with source the gate sees the base table's bytes -> demoted at max=0
-    assert "strategy=broadcast" not in plan(sizing.gated_broadcast(ck, source=d))
+def _gated_queries() -> list[str]:
+    """Registered queries whose builder's module calls ``_gbcast(``."""
+    return sorted(
+        name
+        for name, q in REGISTRY.items()
+        if "_gbcast(" in Path(inspect.getsourcefile(q.build)).read_text()
+    )
+
+
+def _gbcast_sites() -> set[str]:
+    """``file:line`` of every ``_gbcast(`` call in the plans package."""
+    return {
+        f"{path.name}:{n}"
+        for path in Path(plans.__file__).parent.glob("*.py")
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "_gbcast(" in line
+    }
+
+
+def test_every_gated_site_demotes_at_bound_zero(spark, sf_smoke, monkeypatch):
+    """Forced-demotion sweep: build every query whose module calls
+    ``_gbcast`` with the bound at 0. Every gated_broadcast call must
+    drop its hint (a site the gate cannot size keeps the hint at every
+    scale), every ``_gbcast(`` line must be reached, and every size seen
+    must sit at or below the default bound — so no plan at test or
+    bench scale moved. One build pass: 232 queries, 87 calls at 84
+    sites, 115 s at sf0.001 on a 4-core box."""
+    bound = sizing._BCAST_INPUT_MAX
+    monkeypatch.setattr(sizing, "_BCAST_INPUT_MAX", 0)
+    sized, demoted = [], []
+    real_input_bytes = sizing.input_bytes
+
+    def spy_input_bytes(df):
+        sized.append(real_input_bytes(df))
+        return sized[-1]
+
+    monkeypatch.setattr(sizing, "input_bytes", spy_input_bytes)
+    monkeypatch.setattr(
+        sizing, "record_gate", lambda site, size, shape: demoted.append((site, size, shape))
+    )
+    for name in _gated_queries():
+        wrapped_build(name)(spark, sf_smoke)
+
+    assert len(demoted) == len(sized), f"{len(sized) - len(demoted)} calls kept the hint"
+    assert {shape for _, _, shape in demoted} == {"no-hint(AQE)"}
+    assert {site.split("@", 1)[1] for site, _, _ in demoted} == _gbcast_sites()
+    assert max(sized) <= bound
